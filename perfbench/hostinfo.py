@@ -1,15 +1,18 @@
-"""Host-side probes: CPU steal, resident memory of the Spark processes,
-versions and source identity for the result record.  Linux ``/proc`` only;
+"""Host-side probes: CPU steal, memory of the Spark processes, versions
+and source identity for the result record.  Linux ``/proc`` only;
 every probe degrades to ``None``/``0`` where ``/proc`` is unreadable."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import subprocess
 import sys
 import threading
 import time
+
+from py4j.protocol import Py4JError
 
 
 def cpu_jiffies() -> tuple[int, int]:
@@ -103,31 +106,79 @@ def proc_cpu_s(pids: list[int]) -> float:
     return total / tick
 
 
-class RssSampler:
-    """Peak summed resident memory of the Spark JVM, the PySpark daemon and
-    its Python workers, sampled on a background thread.  The peak also takes
-    each process's own high-water mark (``VmHWM``) into account, so short
-    spikes between samples count."""
+class MemorySampler:
+    """Memory of the Spark processes: the JVM heap the program still holds
+    after its timed passes, the JVM's peak off-heap use, and the peak
+    resident memory of the PySpark daemon and its Python workers.
 
-    def __init__(self, interval_s: float = 0.2):
+    The JVM's resident size is not used, nor the heap in use at its peak:
+    both follow how far G1 chose to grow the heap (up to ``-Xmx``), which
+    depends on how busy the host is more than on what the program keeps.
+    ``settle`` (called after the last timed pass, outside the timed
+    regions) instead runs full GCs until the heap in use stops falling:
+    Spark releases the blocks, broadcasts and shuffle state of dropped
+    DataFrames only after a GC, asynchronously and a chain at a time, so a
+    single GC reads anything between the settled value and twice it.  What
+    is left is what the program keeps: pinned and cached blocks, driver-side
+    state, anything that leaks from pass to pass.  A background thread
+    samples the JVM's non-heap (metaspace, code cache) and direct-buffer
+    use, the Python processes' summed resident memory every ``interval_s``
+    and each Python process's own high-water mark (``VmHWM``); it also
+    records the sampled peak of the heap in use, garbage included, for the
+    result record only.
+    """
+
+    def __init__(self, spark, interval_s: float = 0.2):
+        mgmt = spark._jvm.java.lang.management.ManagementFactory
+        self._mem = mgmt.getMemoryMXBean()
+        self._buffers = list(mgmt.getPlatformMXBeans(
+            spark._jvm.java.lang.management.BufferPoolMXBean._java_lang_class))
         self.interval_s = interval_s
-        self.peak_kb = 0
-        self._hwm: dict[int, int] = {}
+        self.py_peak_kb = 0
+        self._py_hwm: dict[int, int] = {}
+        self.offheap_peak = 0
+        self.heap_sampled_peak = 0
+        self.settled: list[int] = []    # heap in use after each full GC of settle()
         self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, name="rss-sampler", daemon=True)
+        self._thread = threading.Thread(target=self._run, name="mem-sampler", daemon=True)
+
+    def _heap_used(self) -> int:
+        return self._mem.getHeapMemoryUsage().getUsed()
 
     def sample(self) -> None:
-        pids = spark_processes()
+        pids = python_workers()
         now = sum(_status_kb(p, "VmRSS:") for p in pids)
         for p in pids:
-            self._hwm[p] = max(self._hwm.get(p, 0), _status_kb(p, "VmHWM:"))
-        self.peak_kb = max(self.peak_kb, now)
+            self._py_hwm[p] = max(self._py_hwm.get(p, 0), _status_kb(p, "VmHWM:"))
+        self.py_peak_kb = max(self.py_peak_kb, now)
+        self.heap_sampled_peak = max(self.heap_sampled_peak, self._heap_used())
+        offheap = (self._mem.getNonHeapMemoryUsage().getUsed()
+                   + sum(b.getMemoryUsed() for b in self._buffers))
+        self.offheap_peak = max(self.offheap_peak, offheap)
+
+    def settle(self) -> None:
+        """Full GCs 0.2 s apart until four readings in a row agree within
+        1 MiB (at most 24 GCs).  The cleaning pauses between chains for up
+        to ~0.5 s (two or three readings), so three agreeing readings can
+        still be a plateau."""
+        gc.collect()    # dead DataFrame proxies release their JVM objects
+        self.sample()
+        for _ in range(24):
+            self._mem.gc()
+            self.settled.append(self._heap_used())
+            last = self.settled[-4:]
+            if len(last) == 4 and max(last) - min(last) <= 2**20:
+                return
+            time.sleep(0.2)
 
     def _run(self) -> None:
         while not self._stop.wait(self.interval_s):
-            self.sample()
+            try:
+                self.sample()
+            except Py4JError:  # the gateway closes at shutdown; the last sample stands
+                return
 
-    def __enter__(self) -> "RssSampler":
+    def __enter__(self) -> "MemorySampler":
         self._thread.start()
         return self
 
@@ -136,9 +187,26 @@ class RssSampler:
         self._thread.join(timeout=5)
 
     @property
+    def python_mb(self) -> float:
+        # one worker's own high-water mark can exceed any sampled sum
+        return max(self.py_peak_kb, max(self._py_hwm.values(), default=0)) / 1024.0
+
+    @property
+    def heap_mb(self) -> float:
+        return self.settled[-1] / 2**20
+
+    @property
     def peak_mb(self) -> float:
-        # the JVM's own high-water mark can exceed any sampled sum
-        return max(self.peak_kb, max(self._hwm.values(), default=0)) / 1024.0
+        return self.heap_mb + self.offheap_peak / 2**20 + self.python_mb
+
+    def record(self) -> dict:
+        return {"heap_settled_mb": self.heap_mb,
+                "heap_settle_trail_mb": [b / 2**20 for b in self.settled],
+                "jvm_offheap_peak_mb": self.offheap_peak / 2**20,
+                "python_peak_mb": self.python_mb,
+                "heap_sampled_peak_mb": self.heap_sampled_peak / 2**20,
+                "jvm_vmhwm_mb": max((_status_kb(p, "VmHWM:") for p in spark_processes()
+                                     if _comm(p) == "java"), default=0) / 1024.0}
 
 
 def source_sha(root: str, package: str = "logshipper_spark") -> str:

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload ship_batch --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload ship_batch --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  One run:
 
@@ -11,7 +11,8 @@ Run from the root of a checkout.  One run:
    prepares the workload and runs its warm-up passes; staging
    plus these steps is the set-up time ``setup_s``;
 3. runs passes back to back (closed loop, one client) until ``--seconds``
-   of pass wall time are measured and at least ``MIN_PASSES`` ran;
+   of pass wall time are measured and at least ``MIN_PASSES`` ran
+   (``MIN_TRACED_PASSES`` traced passes with ``--trace 1``);
 4. checks the outputs against independent references (``checks.py``)
    outside the timed regions;
 5. prints a summary, writes the full record to ``.perfbench_results/``,
@@ -39,9 +40,27 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-MIN_PASSES = 3
+MIN_PASSES = 5
+# traced passes of a --trace 1 run: per-layer metrics have no bound, and a
+# traced pass (probes plus the pass, next to an untraced one) costs 2-3x a pass
+MIN_TRACED_PASSES = 2
 MAX_PASSES = 200
 DRIVER_MEMORY = "2g"
+# C1 compilation only, compiling after a tenth of the usual invocation
+# counts (with room in the code cache for that), on a heap that starts at
+# its maximum size.  With the default tiered C2 and a growing heap the JVM
+# keeps speeding up for ten passes and more (ship_batch pass walls
+# 5.3 -> 2.9 s over 12 passes), so a pass's wall depends on how many passes
+# ran before it; with these options the passes after the warm-up ones are
+# flat (README.md, "JIT").  -Xms commits the heap but touches no page, so
+# the memory metric is not pinned by it (nothing is pre-touched)
+JVM_OPTIONS = ("-XX:TieredStopAtLevel=1 -XX:CompileThresholdScaling=0.1 "
+               "-XX:ReservedCodeCacheSize=256m -Xms" + DRIVER_MEMORY)
+TAIL_PERCENTILE = 90
+# the traced run of a gated workload also traces these workloads, so that
+# every layer has per-layer numbers although only two workloads are gated
+# (README.md, "Run budget")
+COMPANIONS = {"ship_batch": ["ship_incremental"]}
 
 E2E_METRICS = [
     ("setup_s", "s"),
@@ -81,13 +100,12 @@ LAYER_METRICS = [
 
 
 def tail(walls: list[float]) -> tuple[float, float]:
-    """(value, percentile): the highest percentile with at least ten passes
-    above it; with fewer than 11 passes, the slowest pass (percentile 100)."""
-    s = sorted(walls)
-    n = len(s)
-    if n < 11:
-        return s[-1], 100.0
-    return s[n - 11], 100.0 * (n - 10) / n
+    """(value, percentile): the ``TAIL_PERCENTILE``-th percentile of the
+    pass walls, interpolated between the closest ranks."""
+    if len(walls) == 1:
+        return walls[0], float(TAIL_PERCENTILE)
+    cuts = statistics.quantiles(walls, n=100, method="inclusive")
+    return cuts[TAIL_PERCENTILE - 1], float(TAIL_PERCENTILE)
 
 
 def session_conf(work: str, trace: bool) -> dict[str, str]:
@@ -95,11 +113,8 @@ def session_conf(work: str, trace: bool) -> dict[str, str]:
         "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # a fixed, pre-touched heap: otherwise G1 grows it by how busy the
-        # host is, and peak RSS swings by ~2x between identical runs
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp "
-                                         f"-Dderby.system.home={work}/derby "
-                                         f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
+                                         f"-Dderby.system.home={work}/derby {JVM_OPTIONS}",
         "spark.ui.showConsoleProgress": "false",
     }
     if trace:
@@ -159,12 +174,13 @@ def run(args, work: str) -> dict:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
 
+    companions = COMPANIONS.get(args.workload, []) if args.trace else []
     t_setup = time.perf_counter()
-    # staging runs in its own process, concurrently with the JVM launch
-    staging = subprocess.Popen(
-        [sys.executable, os.path.join(HERE, "stage.py"), "--workload", args.workload,
-         "--seed", str(args.seed), "--out", os.path.join(work, "input")],
-        stdout=subprocess.DEVNULL)
+    # staging runs in its own processes, concurrently with the JVM launch
+    staging = {name: subprocess.Popen(
+        [sys.executable, os.path.join(HERE, "stage.py"), "--workload", name,
+         "--seed", str(args.seed), "--out", os.path.join(work, "input", name)],
+        stdout=subprocess.DEVNULL) for name in [args.workload, *companions]}
 
     from logshipper_spark.session import get_spark
 
@@ -173,10 +189,14 @@ def run(args, work: str) -> dict:
     try:
         spark = get_spark(app_name=f"perfbench_{args.workload}", cores=nproc,
                           shuffle_partitions=nproc, extra_conf=conf)
-        if staging.wait(timeout=120) != 0:
-            raise RuntimeError(f"staging failed with exit code {staging.returncode}")
-        with open(os.path.join(work, "input", "manifest.json")) as f:
-            manifest = json.load(f)
+        session_s = time.perf_counter() - t_setup
+        manifests = {}
+        for name, proc in staging.items():
+            if proc.wait(timeout=120) != 0:
+                raise RuntimeError(f"staging {name} failed with exit code {proc.returncode}")
+            with open(os.path.join(work, "input", name, "manifest.json")) as f:
+                manifests[name] = json.load(f)
+        manifest = manifests[args.workload]
         rec: dict = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
                      "seconds": args.seconds, "commit": hostinfo.git_commit(ROOT),
                      "src_sha": hostinfo.source_sha(ROOT), "versions": hostinfo.versions(),
@@ -184,21 +204,46 @@ def run(args, work: str) -> dict:
                      "client_threads": nproc, "session_conf": conf,
                      "input": {k: manifest.get(k)
                                for k in ("input_rows", "input_bytes", "planted")},
-                     "stage_s": manifest["stage_s"]}
-        # the sampler starts after staging ended, so only Spark's processes
-        # count; the JVM's own high-water mark covers its launch
-        with hostinfo.RssSampler() as rss:
+                     "stage_s": manifest["stage_s"], "companions": companions}
+        with hostinfo.MemorySampler(spark) as mem:
             tracer = Tracer(spark, enabled=False)
             wl = WORKLOADS[args.workload](spark, manifest, work, tracer, nproc)
-            for k in range(wl.WARMUP_PASSES):
-                wl.run_pass(-1 - k)
+            # a traced run warms up with one traced pass, so that its probes
+            # (plans no untraced pass runs) are warm too; one, because a
+            # traced pass costs 2-3x a pass and per-layer metrics have no bound
+            warm = wl.traced_pass if args.trace else wl.run_pass
+            n_warm = 1 if args.trace else wl.WARMUP_PASSES
+            warmups = [hostinfo.timed(lambda: warm(-1 - k))[0] for k in range(n_warm)]
             setup_s = time.perf_counter() - t_setup
-            rec["setup_s"] = setup_s
+            rec.update(setup_s=setup_s, session_s=session_s, warmup_walls=warmups)
 
             walls, steals, pass_ids, raised, rows = [], [], [], set(), 0
+            check_s = 0.0
             check_failed: set[int] = set()
             errors: list[str] = []
             plain, empty_walls = [], []
+
+            def check(w, pass_id: int) -> None:
+                # output checks run between passes, outside the timed region
+                nonlocal check_s
+                if pass_id in raised:
+                    return
+                t_check = time.perf_counter()
+                errs = w.check_pass(pass_id)
+                check_s += time.perf_counter() - t_check
+                if errs:
+                    check_failed.add(pass_id)
+                    errors.extend(errs)
+
+            def check_final(w, ids: list[int]) -> None:
+                nonlocal check_s
+                t_check = time.perf_counter()
+                final = w.check_final()
+                check_s += time.perf_counter() - t_check
+                if final:
+                    errors.extend(final)
+                    check_failed.update(set(ids) if w.failed_passes is None
+                                        else set(ids) & w.failed_passes)
 
             def plain_pass(pass_id: int) -> None:
                 # untraced passes alternate with traced ones: the base of
@@ -208,10 +253,14 @@ def run(args, work: str) -> dict:
                 tracer.enabled = True
 
             i = 0
-            while ((sum(walls) < args.seconds or i < MIN_PASSES) and i < MAX_PASSES
+            min_passes = MIN_TRACED_PASSES if args.trace else MIN_PASSES
+            while ((sum(walls) < args.seconds or i < min_passes) and i < MAX_PASSES
                    and not wl.exhausted()):
                 if args.trace:
                     plain_pass(-100 - i)
+                    # ship_incremental consumes one staged delta per pass
+                    if wl.exhausted():
+                        break
                 j0 = hostinfo.cpu_jiffies()
                 t0 = time.perf_counter()
                 try:
@@ -232,20 +281,39 @@ def run(args, work: str) -> dict:
                     empty_walls.append(empty.wall)
                 pass_ids.append(i)
                 rows += n
-                # output checks run between passes, outside the timed region
-                if i not in raised:
-                    errs = wl.check_pass(i)
-                    if errs:
-                        check_failed.add(i)
-                        errors += errs
+                check(wl, i)
                 i += 1
-            if args.trace:
+            if args.trace and not wl.exhausted():
                 plain_pass(-100 - i)
-            final = wl.check_final()
-            if final:
-                errors += final
-                check_failed |= (set(pass_ids) if wl.failed_passes is None
-                                 else set(pass_ids) & wl.failed_passes)
+            if not args.trace:
+                t_settle = time.perf_counter()
+                mem.settle()
+                rec["settle_s"] = time.perf_counter() - t_settle
+            check_final(wl, pass_ids)
+
+            # companions: a warm-up and MIN_TRACED_PASSES traced passes
+            # each, after the workload's own passes; their pass ids start
+            # at 1000 x (k + 1)
+            traced_companions = []
+            for k, name in enumerate(companions):
+                cwl = WORKLOADS[name](spark, manifests[name], work, tracer, nproc)
+                base = 1000 * (k + 1)
+                for w in range(cwl.WARMUP_PASSES):
+                    cwl.traced_pass(-base - 1 - w)
+                ids = []
+                for p in range(base, base + MIN_TRACED_PASSES):
+                    if cwl.exhausted():
+                        break
+                    try:
+                        cwl.traced_pass(p)
+                    except Exception:  # counted, reported and survived as above
+                        traceback.print_exc()
+                        raised.add(p)
+                    ids.append(p)
+                    check(cwl, p)
+                check_final(cwl, ids)
+                traced_companions.append((cwl, ids))
+            rec["check_s"] = check_s
             rec["check_errors"] = errors[:50]
             failed = len(raised | check_failed)
             if not args.trace:
@@ -260,15 +328,18 @@ def run(args, work: str) -> dict:
                     "pass_s_tail": tail_v,
                     "ok_ratio": (len(pass_ids) - failed) / len(pass_ids),
                     "out_bytes_per_row": wl.bytes_per_row(set(pass_ids)),
+                    "peak_rss_mb": mem.peak_mb,
                 }
-        if not args.trace:
-            values["peak_rss_mb"] = rss.peak_mb
+                rec["memory"] = mem.record()
+        t_stop = time.perf_counter()
         stop_jvm(spark)
         spark = None
+        rec["stop_s"] = time.perf_counter() - t_stop
     finally:
-        if staging.poll() is None:
-            staging.kill()
-            staging.wait()
+        for proc in staging.values():
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
         if spark is not None:
             stop_jvm(spark)
 
@@ -296,7 +367,13 @@ def run(args, work: str) -> dict:
         # to milliseconds), other metrics 0
         empty = statistics.median(empty_walls)
         values = {name: empty if unit == "s" else 0.0 for name, unit in LAYER_METRICS}
-        values.update(median_metrics(per))
+        # a companion supplies the layers the workload itself does not call
+        own = median_metrics(per)
+        for cwl, ids in traced_companions:
+            cper = [cwl.layer_metrics(view, p) for p in ids if p not in raised]
+            values.update({k: v for k, v in median_metrics(cper).items() if k not in own})
+            rec[f"layers_per_pass.{cwl.name}"] = cper
+        values.update(own)
         values["trace.overhead_ratio"] = values["pass.wall_s"] / statistics.median(plain) - 1
         rec["layers_per_pass"] = per
         rec["plain_pass_walls"] = plain
@@ -305,7 +382,7 @@ def run(args, work: str) -> dict:
         units = dict(LAYER_METRICS)
     else:
         units = dict(E2E_METRICS)
-    rec["attempted"] = len(pass_ids)
+    rec["attempted"] = len(pass_ids) + sum(len(ids) for _w, ids in traced_companions)
     rec["failed"] = failed
     rec["correct"] = not errors and not raised
     rec["metrics"] = {k: {"value": float(values[k]), "unit": units[k]} for k in units}
@@ -319,7 +396,7 @@ def main(argv: list[str]) -> int:
                              "all"],
                     help="'all' runs each workload of BENCHMARK.json in turn")
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=8.0)
+    ap.add_argument("--seconds", type=float, default=20.0)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = ap.parse_args(argv)
     # a terminated run still stops its JVM and removes its scratch (finally blocks)

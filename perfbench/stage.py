@@ -19,6 +19,12 @@ Three input kinds:
   extra 28-pattern grok pack, plus free text that no pattern matches.
 * **delta stream** (``ship_incremental``): the same turn generator, cut into
   equal delta files with disjoint conversation ids and no mega-conversation.
+  Besides the deltas a run appends, it stages a history: ``HISTORY_DELTAS``
+  earlier deltas already in the table, and a checkpoint that records them
+  as committed, in the runner's layout (``state.json`` with one commit per
+  sink and the processed file list, one ``_lineage`` part file per run).
+  The runner then starts from the state of a job that has been running a
+  while, and its lineage compaction falls inside a timed pass.
 * **corpus** (``curate_corpus``): documents in five languages with planted
   exact duplicates, near-duplicate clusters (3-shingle Jaccard >= 0.95) and
   a held-out bench slice that some train documents overlap by 5-grams.
@@ -44,6 +50,12 @@ import pyarrow.parquet as pq
 TRANSCRIPT_TURNS = 36_000         # ~3,100 conversations
 DELTA_TURNS = 4_000               # turns per appended delta file
 N_DELTAS = 40                     # more than one run can consume
+# runs the checkpoint has already committed when a run starts.  The runner
+# compacts _lineage once it holds more than 64 part files (one per run), so
+# with one warm-up delta the second timed delta triggers the compaction
+HISTORY_DELTAS = 62
+N_BUCKETS_INCREMENTAL = 8         # see README.md, "Why 8 buckets"
+INCREMENTAL_SINKS = ["errors", "syslog", "archive"]
 CORPUS_DOCS = 4_000               # train documents
 BENCH_DOCS = 400                  # held-out bench slice (10 %)
 EXACT_DUP_SHARE = 0.06            # train docs that are exact copies
@@ -275,6 +287,68 @@ def corpus(seed: int, n_train: int, n_bench: int) -> tuple[pa.Table, pa.Table, d
     return train, bench, truth
 
 
+# -- incremental history -----------------------------------------------------
+LINEAGE_SCHEMA = pa.schema([
+    ("snapshot_id", pa.string()), ("sink", pa.string()), ("bucket", pa.int32()),
+    ("rows", pa.int64()), ("wall_ms", pa.int64()), ("completed_at", pa.timestamp("us", tz="UTC")),
+])
+
+
+def routed_counts(t: pa.Table) -> dict[str, int]:
+    """Rows per sink under the benchmark's routing (errors, syslog, drop
+    DEBUG, archive the rest): the counts a commit of ``t`` records."""
+    import pyarrow.compute as pc
+
+    text = t.column("text")
+    n = lambda mask: int(pc.sum(pc.cast(mask, pa.int64())).as_py() or 0)  # noqa: E731
+    return {"errors": n(pc.starts_with(text, "ERROR ")), "syslog": n(pc.starts_with(text, "<")),
+            "archive": t.num_rows - n(pc.starts_with(text, "DEBUG "))}
+
+
+def history(seed: int, table_dir: str, ckpt: str, out_dir: str) -> int:
+    """Stage ``HISTORY_DELTAS`` committed deltas: their files in
+    ``table_dir``, their commits in ``ckpt/state.json`` and one lineage part
+    file per run in ``ckpt/_lineage``, as ``CheckpointedRunner`` leaves
+    them.  Returns the bytes of the history's data files."""
+    import hashlib
+
+    rng = np.random.default_rng(seed + 2_000_003)
+    state: dict = {"committed": {}, "processed_files": []}
+    lineage = os.path.join(ckpt, "_lineage")
+    os.makedirs(lineage, exist_ok=True)
+    t_us = (T0_EPOCH + 40 * 24 * 3600) * 1_000_000
+    size = 0
+    for h in range(HISTORY_DELTAS):
+        part = transcripts(seed * 1_000 + 500 + h, DELTA_TURNS, conv_prefix=f"hist{h:03d}",
+                           mega=False)
+        path = os.path.join(table_dir, f"delta-h{h:04d}.parquet")
+        size += _write(part, path)
+        snap = "inc_" + hashlib.sha256(f"{seed}/{path}".encode()).hexdigest()[:12]
+        rows = []
+        commits = {}
+        for sink, n in routed_counts(part).items():
+            wall = int(rng.integers(300, 900))
+            t_us += wall * 1_000
+            commits[sink] = {"rows": n, "wall_ms": wall,
+                             "path": os.path.join(out_dir, f"sink={sink}", f"ingest={snap}")}
+            per_bucket = rng.multinomial(n, [1 / N_BUCKETS_INCREMENTAL] * N_BUCKETS_INCREMENTAL)
+            rows.append((snap, sink, -1, n, wall, t_us))
+            rows += [(snap, sink, b, int(k), wall, t_us) for b, k in enumerate(per_bucket) if k]
+        state["committed"][snap] = commits
+        state["processed_files"].append(path)
+        cols = list(zip(*rows))
+        pq.write_table(pa.table([pa.array(c, f.type) for c, f in zip(cols, LINEAGE_SCHEMA)],
+                                schema=LINEAGE_SCHEMA),
+                       os.path.join(lineage, f"part-00000-hist{h:04d}-c000.zstd.parquet"),
+                       compression="zstd", use_deprecated_int96_timestamps=True)
+        t_us += int(rng.integers(60, 600)) * 1_000_000
+    open(os.path.join(lineage, "_SUCCESS"), "w").close()
+    state["processed_files"].sort()
+    with open(os.path.join(ckpt, "state.json"), "w") as f:
+        json.dump(state, f, indent=2)
+    return size
+
+
 # -- staging -----------------------------------------------------------------
 def _write(table: pa.Table, path: str, row_group: int = 16_384) -> int:
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -284,6 +358,7 @@ def _write(table: pa.Table, path: str, row_group: int = 16_384) -> int:
 
 def stage(workload: str, seed: int, out: str) -> dict:
     t0 = time.perf_counter()
+    out = os.path.abspath(out)
     os.makedirs(out, exist_ok=True)
     man: dict = {"workload": workload, "seed": seed, "files": {}}
     if workload in ("ship_batch", "parse_heavy"):
@@ -307,11 +382,15 @@ def stage(workload: str, seed: int, out: str) -> dict:
             p = os.path.join(out, "deltas", f"delta-{d:05d}.parquet")
             size += _write(part, p)
             paths.append(p)
-        man["files"]["deltas"] = paths
+        files = {k: os.path.join(out, k) for k in ("table", "ckpt", "sinks")}
+        hist_bytes = history(seed, files["table"], files["ckpt"], files["sinks"])
+        man["files"].update(files, deltas=paths)
         man["delta_rows"] = [DELTA_TURNS] * N_DELTAS
         man["input_rows"] = DELTA_TURNS * N_DELTAS
         man["input_bytes"] = size
-        man["planted"] = {"deltas": N_DELTAS, "mega_convs": 0}
+        man["planted"] = {"deltas": N_DELTAS, "mega_convs": 0,
+                          "history_deltas": HISTORY_DELTAS, "history_rows": DELTA_TURNS * HISTORY_DELTAS,
+                          "history_bytes": hist_bytes}
     elif workload == "curate_corpus":
         train, bench, truth = corpus(seed, CORPUS_DOCS, BENCH_DOCS)
         size = _write(train, os.path.join(out, "train", "part-00000.parquet"), 2_048)

@@ -26,10 +26,11 @@ def test_benchmark_json_matches_run():
 
 
 def test_tail_percentile():
-    assert run.tail([3.0, 1.0, 2.0]) == (3.0, 100.0)
-    walls = [float(i) for i in range(1, 21)]            # 20 passes
-    value, pct = run.tail(walls)
-    assert value == 10.0 and pct == 50.0                 # ten passes above it
+    assert run.tail([2.5]) == (2.5, 90.0)
+    walls = [float(i) for i in range(11, 0, -1)]        # 11 passes, 1..11 s
+    assert run.tail(walls) == (10.0, 90.0)              # rank 1 + 0.9 x 10
+    value, _ = run.tail([1.0, 2.0, 3.0, 4.0, 5.0, 6.0])
+    assert value == 5.5                                  # between the top two
 
 
 def test_fails_without_the_library(tmp_path):

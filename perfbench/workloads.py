@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 import checks
 from eventlog import TraceView, union_length
+from stage import INCREMENTAL_SINKS as SINKS, N_BUCKETS_INCREMENTAL
 
 ROUTES = [
     {"match": {"text": "^ERROR "}, "forward": ["errors"]},
@@ -25,10 +26,8 @@ ROUTES = [
     {"match": {"text": "^DEBUG "}, "drop": True},
     {"forward": ["archive"]},
 ]
-SINKS = ["errors", "syslog", "archive"]
 MIX = {"en": 0.8, "de": 0.6, "fr": 0.6}
 NEAR_DUP_THRESHOLD = 0.5
-N_BUCKETS_INCREMENTAL = 8
 
 
 def noop(df) -> None:
@@ -57,8 +56,9 @@ class Workload:
     # per-layer metrics that are self times: with pass.unattributed_s they
     # add up to the traced pass wall
     SELF: tuple[str, ...] = ()
-    # untimed passes at the end of set-up: the first is cold (JIT, code
-    # generation, Python workers) and the second still ~25 % slow
+    # untimed passes at the end of set-up.  One cold pass (JIT, code
+    # generation, Python workers) takes 3-4x a warm one; the next is still
+    # ~10 % slow, and would be the tail pass of most runs
     WARMUP_PASSES = 2
     # pass ids that check_final found wrong, for checks that can tell passes
     # apart; None means its verdict holds for every pass
@@ -97,18 +97,18 @@ class Workload:
     def span(self, name: str, pass_id: int, probe: bool = False, parent: str | None = None):
         return self.tracer.span(name, pass_id, probe=probe, parent=parent)
 
-    def _sinks_concurrently(self, sinks: dict, pass_id: int) -> None:
-        """Noop-write each sink frame; at most ``client_threads`` at once."""
+    def _sinks_concurrently(self, sinks: dict, pass_id: int, action=noop) -> dict:
+        """Run ``action`` (a noop write by default) on each sink frame, at
+        most ``client_threads`` at once; returns its results by sink."""
         parent = self.tracer.current()
 
-        def one(item):
-            name, df = item
+        def one(name, df):
             with self.span(f"sink.{name}", pass_id, parent=parent):
-                noop(df)
+                return action(df)
 
         with ThreadPoolExecutor(max_workers=min(self.threads, len(sinks))) as ex:
-            for f in [ex.submit(one, it) for it in sinks.items()]:
-                f.result()
+            futures = {name: ex.submit(one, name, df) for name, df in sinks.items()}
+            return {name: f.result() for name, f in futures.items()}
 
 
 # -- transcripts: ship_batch and parse_heavy -------------------------------------------
@@ -133,15 +133,14 @@ class _Transcripts(Workload):
         }
 
     def _collect_aggregates(self, sinks: dict) -> tuple[dict, int]:
-        """Sink values for the check, and their Arrow size in bytes."""
-        got, nbytes = {}, 0
-        for name, df in sinks.items():
-            if name == "events_per_minute":
-                df = df.select(F.unix_timestamp("minute").alias("minute"), "n_events")
-            tbl = df.toArrow()
-            nbytes += tbl.nbytes
-            got[name] = [tuple(r.values()) for r in tbl.to_pylist()]
-        return got, nbytes
+        """Sink values for the check, and their Arrow size in bytes.  The
+        sinks are collected concurrently, as the passes run them."""
+        if "events_per_minute" in sinks:
+            sinks = dict(sinks, events_per_minute=sinks["events_per_minute"].select(
+                F.unix_timestamp("minute").alias("minute"), "n_events"))
+        tables = self._sinks_concurrently(sinks, -1, action=lambda df: df.toArrow())
+        got = {name: [tuple(r.values()) for r in tbl.to_pylist()] for name, tbl in tables.items()}
+        return got, sum(tbl.nbytes for tbl in tables.values())
 
 
 class ShipBatch(_Transcripts):
@@ -352,12 +351,13 @@ class ParseHeavy(_Transcripts):
 # -- ship_incremental --------------------------------------------------------------------
 class ShipIncremental(Workload):
     """Append one delta file, then ``CheckpointedRunner.run_incremental``
-    with the routing pipeline and its 3 sinks.  State and output persist
-    across passes, as for a long-running job."""
+    with the routing pipeline and its 3 sinks.  The checkpoint starts with
+    the staged history of committed deltas; state and output persist across
+    passes, as for a long-running job."""
 
     name = "ship_incremental"
     SELF = ("scan.wall_s", "route.wall_s", "route.plan_s", "runner.wall_s")
-    # the second delta is already within ~5 % of later ones
+    # one, so that the second timed delta compacts _lineage (stage.HISTORY_DELTAS)
     WARMUP_PASSES = 1
 
     def __init__(self, *a, **kw):
@@ -366,16 +366,15 @@ class ShipIncremental(Workload):
         super().__init__(*a, **kw)
         self.pending = list(self.man["files"]["deltas"])
         self.rows_of = dict(zip(self.pending, self.man["delta_rows"]))
-        self.table = os.path.join(self.work, "table")
-        self.out = os.path.join(self.work, "out")
-        self.ckpt = os.path.join(self.work, "ckpt")
-        os.makedirs(self.table, exist_ok=True)
+        files = self.man["files"]
+        self.table, self.ckpt, self.out = files["table"], files["ckpt"], files["sinks"]
         self.done: list[tuple[int, str, str, dict]] = []   # pass, snapshot, file, written
         self.delta_rows: dict[int, int] = {}
         self.state_kb: dict[int, float] = {}
         # 8 buckets, not the runner's default 64: on a 4,000-row delta, 64
-        # buckets write ~180 files of ~20 rows and file creation alone made
-        # the pass 2.2x longer (7.0 s vs 3.2 s) and noisier
+        # buckets write ~190 files of ~20 rows, a pass takes 8-14 s instead
+        # of 3-6 s, and the runs no longer fit the regression check's time
+        # budget (README.md, "Why 8 buckets")
         self.runner = CheckpointedRunner(self.spark, self.ckpt, n_buckets=N_BUCKETS_INCREMENTAL)
 
     def exhausted(self) -> bool:
@@ -477,6 +476,7 @@ class CurateCorpus(Workload):
         self.bench_path = self.man["files"]["bench"]
         self.rows = self.man["input_rows"]
         self.counts: dict[int, dict[str, int]] = {}
+        self.deduped: dict | None = None        # the reference, built by the first check
 
     def _score(self):
         from logshipper_spark.functions import textstats
@@ -520,29 +520,40 @@ class CurateCorpus(Workload):
         return deduped, pairs, self._mix(survivors, self._hits(survivors))
 
     def run_pass(self, pass_id: int) -> int:
-        # the last pass's frames stay referenced, so the check re-reads its
-        # pins instead of recomputing the whole chain
+        # the pass's frames stay referenced until the next pass, so its
+        # check re-reads the pins instead of recomputing the whole chain
         self.last = self._frames()
         noop(self.last[2])
         return self.rows
 
-    def check_final(self) -> list[str]:
+    def _reference(self) -> None:
         import json
 
+        con = checks.connect()
+        self.deduped = checks.curation_deduped(con, os.path.join(self.train_path, "*.parquet"))
+        with open(self.man["files"]["truth"]) as f:
+            self.truth = json.load(f)
+        self.bench = [r[0] for r in con.execute(
+            f"SELECT text FROM read_parquet('{self.bench_path}/*.parquet')").fetchall()]
+        self.expected: dict[tuple, dict] = {}   # reported pairs -> expected mix
+
+    def check_pass(self, pass_id: int) -> list[str]:
+        """The near-duplicate pairs and the curated mix of this pass."""
+        if self.deduped is None:
+            self._reference()
         _deduped, pairs_df, out_df = self.last
-        pairs = [(int(a), int(b), float(j)) for a, b, j in pairs_df.collect()]
-        tbl = out_df.toArrow()
+        tables = self._sinks_concurrently({"pairs": pairs_df, "out": out_df}, -1,
+                                          action=lambda df: df.toArrow())
+        pairs = sorted((int(r["id_a"]), int(r["id_b"]), float(r["jaccard"]))
+                       for r in tables["pairs"].to_pylist())
+        tbl = tables["out"]
         self.out_bytes = tbl.nbytes
         got = [(r["doc_id"], r["lang"], r["q_score"]) for r in tbl.to_pylist()]
-        con = checks.connect()
-        deduped = checks.curation_deduped(con, os.path.join(self.train_path, "*.parquet"))
-        with open(self.man["files"]["truth"]) as f:
-            truth = json.load(f)
-        bench = [r[0] for r in con.execute(
-            f"SELECT text FROM read_parquet('{self.bench_path}/*.parquet')").fetchall()]
-        errs = checks.check_pairs(deduped, pairs, truth, NEAR_DUP_THRESHOLD)
-        want, _ = checks.curation_expected(deduped, pairs, bench, MIX)
-        return errs + checks.check_curated(got, want)
+        errs = checks.check_pairs(self.deduped, pairs, self.truth, NEAR_DUP_THRESHOLD)
+        key = tuple(pairs)
+        if key not in self.expected:
+            self.expected[key] = checks.curation_expected(self.deduped, pairs, self.bench, MIX)[0]
+        return errs + checks.check_curated(got, self.expected[key])
 
     def traced_pass(self, pass_id: int) -> None:
         from logshipper_spark.functions import dedup
