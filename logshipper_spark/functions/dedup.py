@@ -13,8 +13,11 @@ Four tiers, increasing fuzziness, each designed around its shuffle shape:
   near-dups share the fingerprint (or a rotated band of it).
 * **n-gram Jaccard**   — exact verification metric over candidate pairs.
 
-All hashing is xxhash64-based (JVM, codegen); shingling uses built-in
-``F.transform``/``F.slice`` over a token array — no Python in the hot path.
+MinHash signatures come from one Arrow-batched numpy pass per partition
+(tokenize, shingle, crc32, universal-hash broadcast); SimHash and the band
+keys are xxhash64-based JVM expressions.  All three LSH candidate joins
+(minhash bands, simhash chunks, ``similarity.cosine_pairs`` sketches) share
+one bucket-capped candidate generator, ``bucket_pairs``.
 """
 
 from __future__ import annotations
@@ -47,66 +50,7 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, on=id_col, how="left_semi")
 
 
-# ------------------------------------------------------------- shingles --
-def _shingles(text_col: Column, k: int = 3) -> Column:
-    """k-token shingles as an array of strings (lowercased words)."""
-    toks = F.split(F.lower(F.regexp_replace(text_col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
-    toks = F.filter(toks, lambda t: t != "")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-
-
-def ngram_set(text_col: Column, k: int = 3) -> Column:
-    return F.array_distinct(_shingles(text_col, k))
-
-
 # -------------------------------------------------------------- minhash --
-def minhash_signature(text_col: Column, num_hashes: int = 32, k: int = 3,
-                      seed: int = 7) -> Column:
-    """K minhash values in ONE pass over the shingle set — the composable
-    Column form.
-
-    NOTE: higher-order-function lambdas are interpreted (not codegen'd), so
-    this costs ~ms per row.  The scale path is ``minhash_signatures`` below
-    (explode + codegen hash-aggregate, ~20x faster, measured); this form is
-    kept for inline/streaming use where a groupBy is awkward.
-    """
-    sh = ngram_set(text_col, k)
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(acc, idx, lambda a, i: F.least(a, F.xxhash64(s, i + seed))),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    k: int = 3,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, sig: array<bigint>) via explode + hash aggregate.
-
-    Shingling runs ONCE per doc in the Generate; the K ``min(xxhash64)``
-    aggregates are whole-stage-codegen'd with map-side partial aggregation,
-    so the shuffle carries one (id, K longs) row per doc.
-    """
-    sh = df.select(
-        F.col(id_col).alias("id"), F.explode(ngram_set(F.col(text_col), k)).alias("s")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.col("s"), F.lit(i + seed))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs).select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_signatures_pandas(
     df: DataFrame,
     text_col: str = "text",
@@ -155,6 +99,62 @@ def minhash_signatures_pandas(
     return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(run, out_schema)
 
 
+def bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    bucket_cap: int = 1000,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs from LSH buckets — the one candidate generator behind
+    ``minhash_candidates``, ``simhash_near_duplicates`` and
+    ``similarity.cosine_pairs``.
+
+    ``banded`` holds one row per (doc, bucket): ``id``, the bucket ``keys``
+    and the per-doc ``carry`` columns.  Returns
+    (id_a, id_b, <c>_a, <c>_b for each c in carry) with id_a < id_b, one row
+    per shared bucket — a pair sharing several buckets repeats, so callers
+    dedupe.  Plan shape: ONE shuffle on the bucket key, per-bucket
+    self-join; the text/vectors never shuffle unless carried.
+
+    ``bucket_cap`` — the degenerate-bucket guard: a bucket holding n docs
+    produces n(n-1)/2 pairs inside ONE task, so a boilerplate/empty-doc
+    bucket with 10^5 members is a 5·10^9-pair task at corpus scale.
+    Buckets with more than ``bucket_cap`` members are NOT silently dropped:
+    they emit STAR pairs (min-id hub × every member, O(n) pairs) instead of
+    all-pairs — downstream exact verification still sees every member of
+    the bucket, and identical-doc floods resolve through the hub
+    (connected components / keep-min-id semantics are unaffected).  Genuine
+    near-dup pairs between two non-hub members of an oversize bucket may be
+    missed — the standard LSH recall/cost trade, bounded and explicit.
+    ``bucket_cap=0`` emits all pairs.
+    """
+    def all_pairs(rows: DataFrame) -> DataFrame:
+        a, b = rows.alias("a"), rows.alias("b")
+        on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        return a.join(b, on + [F.col("a.id") < F.col("b.id")]).select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+
+    if not bucket_cap:
+        return all_pairs(banded)
+    # per-bucket size + hub (+ the hub's carried values) in one aggregate;
+    # the hub is the bucket's min id, so hub × member is already id_a < id_b
+    stats = banded.groupBy(*keys).agg(
+        F.count("*").alias("bn"),
+        F.min("id").alias("hub"),
+        *[F.min_by(c, "id").alias(f"hub_{c}") for c in carry],
+    )
+    tagged = banded.join(stats, keys)
+    star = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub"))).select(
+        F.col("hub").alias("id_a"),
+        F.col("id").alias("id_b"),
+        *[F.col(f"hub_{c}" if s == "a" else c).alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+    return all_pairs(tagged.where(F.col("bn") <= bucket_cap)).unionByName(star)
+
+
 def minhash_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -162,33 +162,17 @@ def minhash_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    strategy: str = "pandas",
     bucket_cap: int = 1000,
     seed: int = 7,
 ) -> DataFrame:
     """LSH banding: docs sharing any (band_id, band_hash) bucket become
     candidate pairs.  Plan shape: narrow signature compute → explode to
-    B rows/doc → ONE shuffle on the band hash → per-bucket self-join.
-
-    ``strategy``: 'pandas' (numpy batch, fastest) or 'jvm' (explode +
-    codegen aggregate, zero Python).  Returns (id_a, id_b), id_a < id_b,
-    distinct.
-
-    ``bucket_cap`` — the degenerate-bucket guard: a bucket holding n docs
-    produces n(n-1)/2 pairs inside ONE task, so a boilerplate/empty-doc
-    bucket with 10^5 members is a 5·10^9-pair task at corpus scale.
-    Buckets with more than ``bucket_cap`` members are NOT silently dropped:
-    they emit STAR pairs (min-id hub × every member, O(n) pairs) instead of
-    all-pairs — downstream exact-Jaccard verification still sees every
-    member of the bucket, and identical-doc floods resolve through the hub
-    (connected components / keep-min-id semantics are unaffected).  Genuine
-    near-dup pairs between two non-hub members of an oversize bucket may be
-    missed — the standard LSH recall/cost trade, bounded and explicit.
-    Set ``bucket_cap=0`` to disable.
+    B rows/doc → ``bucket_pairs`` (ONE shuffle on the band hash →
+    per-bucket self-join, oversize buckets hub-star).  Returns
+    (id_a, id_b), id_a < id_b, distinct.
     """
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_pandas if strategy == "pandas" else minhash_signatures
-    sig = sig_fn(df, text_col, id_col, num_hashes, k, seed)
+    sig = minhash_signatures_pandas(df, text_col, id_col, num_hashes, k, seed)
     banded = sig.select(
         "id",
         F.posexplode(
@@ -212,36 +196,7 @@ def minhash_candidates(
     # and cuts the plan to ONE signature pass.  Recomputed from parquet
     # on every invocation (no cross-run state).
     banded = banded.localCheckpoint()
-    if not bucket_cap:
-        a, b = banded.alias("a"), banded.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-    # per-bucket size + hub in one aggregate; the groupBy exchange on the
-    # band key is reused by the subsequent joins (same partitioning)
-    stats = banded.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bn"), F.min("id").alias("hub")
-    )
-    tagged = banded.join(stats, ["band_id", "band_hash"])
-    small = tagged.where(F.col("bn") <= bucket_cap)
-    a, b = small.alias("a"), small.alias("b")
-    pairs_small = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    pairs_star = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub"))).select(
-        F.col("hub").alias("id_a"), F.col("id").alias("id_b")
-    )
-    return pairs_small.unionByName(pairs_star).distinct()
+    return bucket_pairs(banded, ["band_id", "band_hash"], bucket_cap).distinct()
 
 
 def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
@@ -267,8 +222,8 @@ def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
     # r6 verify-stage rework (guide §4.1/§2.3), two changes vs the
     # join-text-then-shingle-per-pair form, output-identical:
     #
-    # 1. Grams come from the Arrow kernel, not the interpreted-HOF
-    #    ngram_set: the transform lambda re-evaluates the tokenize
+    # 1. Grams come from the Arrow kernel, not an interpreted-HOF
+    #    shingler: a transform lambda re-evaluates the tokenize
     #    subexpression PER ELEMENT (tokens × grams evals per text;
     #    measured 1.6 s of a 1.85 s verify for 256 pairs at sf0.1).
     #    Identical output (textstats.ngram_array_pandas: differentially
@@ -519,56 +474,26 @@ def simhash_near_duplicates(
     (chunk_id, chunk hex substring) pair — the text never shuffles.
 
     Oversize chunk buckets (boilerplate floods) emit hub-star candidates
-    instead of all-pairs, same trade as ``minhash_candidates``.
+    instead of all-pairs (``bucket_pairs``).
     Returns (id_a, id_b, hamming), id_a < id_b.
     """
     chunks = max_hamming + 1
     if not 1 <= chunks <= 16:
         raise ValueError("max_hamming must be in [0, 15] (16 hex chars)")
     sh = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
-    # one row per doc (id + 16-char hex); consumed by the chunk explode,
-    # the bucket stats join, both self-join sides and the hub-star lookup
-    # — same repeated-subtree recompute as minhash_candidates (the 64
-    # vote aggregates re-ran per consumer).  Pin it once per invocation.
+    # one row per doc (id + 16-char hex); consumed by the bucket stats
+    # aggregate, the stats join and both self-join sides — same
+    # repeated-subtree recompute as minhash_candidates (the 64 vote
+    # aggregates re-ran per consumer).  Pin it once per invocation.
     sh = sh.localCheckpoint()
     width = 16 // chunks  # hex chars per chunk; remainder folds into the last
     bounds = [(c * width + 1, width if c < chunks - 1 else 16 - (chunks - 1) * width)
               for c in range(chunks)]
     chunk_arr = F.array(*[F.substring("simhash", s, w) for s, w in bounds])
     banded = sh.select("id", "simhash", F.posexplode(chunk_arr).alias("chunk_id", "chunk_val"))
-    stats = banded.groupBy("chunk_id", "chunk_val").agg(
-        F.count("*").alias("bn"), F.min("id").alias("hub")
-    )
-    tagged = banded.join(stats, ["chunk_id", "chunk_val"])
-    small = tagged.where(F.col("bn") <= bucket_cap) if bucket_cap else tagged
-    a, b = small.alias("a"), small.alias("b")
-    cand_small = a.join(
-        b,
-        (F.col("a.chunk_id") == F.col("b.chunk_id"))
-        & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.simhash").alias("sim_a"),
-        F.col("b.simhash").alias("sim_b"),
-    )
-    cand = cand_small
-    if bucket_cap:
-        big = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub")))
-        sh_short = sh.withColumnsRenamed({"id": "hub_join_id", "simhash": "hub_sim"})
-        cand_star = (
-            big.join(sh_short, big["hub"] == sh_short["hub_join_id"])
-            .select(
-                F.least("hub", "id").alias("id_a"),
-                F.greatest("hub", "id").alias("id_b"),
-                F.col("hub_sim").alias("sim_a"),
-                F.col("simhash").alias("sim_b"),
-            )
-        )
-        cand = cand_small.unionByName(cand_star)
+    cand = bucket_pairs(banded, ["chunk_id", "chunk_val"], bucket_cap, carry=("simhash",))
     return (
-        cand.withColumn("hamming", hamming64_hex(F.col("sim_a"), F.col("sim_b")))
+        cand.withColumn("hamming", hamming64_hex(F.col("simhash_a"), F.col("simhash_b")))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()

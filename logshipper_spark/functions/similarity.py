@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from logshipper_spark.functions.dedup import bucket_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -34,6 +36,21 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _matrix(vectors, col: str):
+    """Stack a batch of vectors into an n×d float64 matrix.  A NULL or
+    ragged vector raises one ValueError naming ``col`` — not numpy's shape
+    error from deep inside a Python worker."""
+    import numpy as np
+
+    rows = [np.asarray(v, dtype=np.float64) for v in vectors if v is not None]
+    if len(rows) < len(vectors) or len({r.shape for r in rows}) > 1:
+        raise ValueError(
+            f"vector column {col!r} holds a NULL or ragged vector: every row "
+            "needs a non-NULL vector of the same length"
+        )
+    return np.stack(rows)
 
 
 def embedding_norms(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
@@ -62,9 +79,9 @@ def cosine_topk_pandas(
 
     def run(batches):
         for pdf in batches:
-            if not len(pdf):  # np.stack([]) raises on an empty Arrow batch
+            if not len(pdf):  # an empty Arrow batch has nothing to stack
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            m = _matrix(pdf[vec_col], vec_col)
             sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
             yield pd.DataFrame({id_col: pdf[id_col], "cosine_sim": np.round(sims, 6)})
 
@@ -115,7 +132,7 @@ def cosine_topk_batch(
     import numpy as np
 
     q_ids = [int(q) for q, _ in queries]
-    Q = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])  # Q×d
+    Q = _matrix([v for _, v in queries], "queries")  # Q×d
     Qn = np.linalg.norm(Q, axis=1)
 
     def run(batches):
@@ -124,7 +141,7 @@ def cosine_topk_batch(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            M = _matrix(pdf[vec_col], vec_col)
             sims = (M @ Q.T) / (np.linalg.norm(M, axis=1)[:, None] * Qn[None, :])
             ids = pdf[id_col].to_numpy()
             out_q, out_id, out_s = [], [], []
@@ -175,8 +192,8 @@ def pairwise_cosine_pandas(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[va_col]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vb_col]])
+            A = _matrix(pdf[va_col], va_col)
+            B = _matrix(pdf[vb_col], vb_col)
             cos = (A * B).sum(axis=1) / (
                 np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
             )
@@ -234,7 +251,7 @@ def blocked_cosine_pairs(
 
         pdf = pdf.sort_values(id_col, kind="mergesort")
         ids = pdf[id_col].to_numpy()
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        M = _matrix(pdf[vec_col], vec_col)
         n = np.linalg.norm(M, axis=1)
         out_a, out_b, out_c = [], [], []
         for i0 in range(0, len(ids), strip):
@@ -248,18 +265,21 @@ def blocked_cosine_pairs(
                     out_b.extend(ids[js])
                     out_c.extend(row[js])
         # explicit dtypes: an empty pair set (e.g. a 1-row block) must not
-        # hand Arrow object-dtype columns
+        # hand Arrow object-dtype columns; ids keep the input's dtype
         return pd.DataFrame({
-            "id_a": np.asarray(out_a, dtype=np.int64),
-            "id_b": np.asarray(out_b, dtype=np.int64),
+            "id_a": np.asarray(out_a, dtype=ids.dtype),
+            "id_b": np.asarray(out_b, dtype=ids.dtype),
             "cosine_sim": np.asarray(out_c, dtype=np.float64),
         })
 
+    # id type derived from the input, not hardcoded long — the same
+    # convention as pairwise_cosine_pandas
+    tid = df.schema[id_col].dataType.simpleString()
     cand = (
         df.select(id_col, block_col, vec_col)
         .where(F.col(block_col).isNotNull())
         .groupBy(block_col)
-        .applyInPandas(part, "id_a long, id_b long, cosine_sim double")
+        .applyInPandas(part, f"id_a {tid}, id_b {tid}, cosine_sim double")
     )
     return cand.select(
         "id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim")
@@ -463,7 +483,8 @@ def cosine_pairs(
       sketches cost (P(all bits equal) decays with bits; L tables give
       1-(1-p^bits)^L).
     * ``bucket_cap``: an oversize bucket (embedding floods) emits hub-star
-      candidate pairs (O(n)) instead of all-pairs (O(n²)); every candidate
+      candidate pairs (O(n)) instead of all-pairs (O(n²)) — the shared
+      ``dedup.bucket_pairs`` candidate generator; every candidate
       still passes the EXACT cosine verify, so precision is unaffected —
       only non-hub near-dup pairs inside a flooded bucket can be missed.
     """
@@ -474,44 +495,19 @@ def cosine_pairs(
         sk = hyperplane_sketches(
             df, bits=bits, seed=11 + 97 * t, vec_col=vec_col, id_col=id_col
         )
-        # sk is consumed by the bucket stats, the tagged join, both
-        # candidate self-join sides and the hub-vector lookup — without a
-        # pin the sketch matmul pipeline re-runs once per consumer (r6,
-        # same repeated-subtree fix as minhash_candidates)
+        # sk is consumed by the bucket stats, the tagged join and both
+        # candidate self-join sides — without a pin the sketch matmul
+        # pipeline re-runs once per consumer (r6, same repeated-subtree
+        # fix as minhash_candidates)
         sk = sk.localCheckpoint()
-        if bucket_cap:
-            stats = sk.groupBy("sketch").agg(F.count("*").alias("bn"), F.min("id").alias("hub"))
-            tagged = sk.join(stats, "sketch")
-            small = tagged.where(F.col("bn") <= bucket_cap)
-            a, b = small.alias("a"), small.alias("b")
-            pairs_small = a.join(
-                b, (F.col("a.sketch") == F.col("b.sketch")) & (F.col("a.id") < F.col("b.id"))
-            ).select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            )
-            big = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub")))
-            hub_vecs = sk.select(F.col("id").alias("hub_id"), F.col("v").alias("hub_v"))
-            pairs_star = big.join(hub_vecs, big["hub"] == hub_vecs["hub_id"]).select(
-                F.col("hub").alias("id_a"), F.col("id").alias("id_b"),
-                F.col("hub_v").alias("va"), F.col("v").alias("vb"),
-            )
-            t_pairs = pairs_small.unionByName(pairs_star)
-        else:
-            a, b = sk.alias("a"), sk.alias("b")
-            t_pairs = a.join(
-                b, (F.col("a.sketch") == F.col("b.sketch")) & (F.col("a.id") < F.col("b.id"))
-            ).select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            )
+        t_pairs = bucket_pairs(sk, ["sketch"], bucket_cap, carry=("v",))
         cand = t_pairs if cand is None else cand.unionByName(t_pairs)
     # vectorized exact verify (r6): the interpreted cosine() column form
     # pays per-element HOF evals on every candidate pair — the dominant
     # cost on dup-heavy corpora; differentially verified equal at 6
     # places over 212k pairs
     return (
-        pairwise_cosine_pandas(cand.dropDuplicates(["id_a", "id_b"]))
+        pairwise_cosine_pandas(cand.dropDuplicates(["id_a", "id_b"]), "v_a", "v_b")
         .select("id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim"))
         .where(F.col("cosine_sim") >= threshold)
     )
@@ -689,7 +685,7 @@ def embedding_decontam(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            m = _matrix(pdf[vec_col], vec_col)
             if bm.size:
                 # zero-norm train rows: normalize by 1 → zero vector →
                 # max_cos 0.0 (deterministic, below any real threshold),
@@ -781,7 +777,7 @@ def cluster_assign(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            m = _matrix(pdf[vec_col], vec_col)
             sims = np.round(
                 (m @ c.T) / (np.linalg.norm(m, axis=1)[:, None] * cn[None, :]), 6
             )

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def with_bucket(df: DataFrame, key: str = "conv_id", n_buckets: int = 64,
@@ -129,12 +129,24 @@ def write_fanout_per_sink(
         # cap at 8: this host (and most) degrades past ~8 saturated
         # concurrent jobs (CLAUDE.md steal hazard); the back-fill benefit
         # saturates well below that (review r6)
+        # After the first failed write, queued sink writes never start
+        # (checked in the worker: a shutdown(cancel_futures=True) here
+        # would race the failed worker taking the next sink); running
+        # writes finish before the cache drops, then that error re-raises.
+        errors: list[Exception] = []
+
+        def _write_unless_failed(sink: str) -> None:
+            if errors:
+                return
+            try:
+                _write(sink)
+            except Exception as e:
+                errors.append(e)
+
         with ThreadPoolExecutor(max_workers=max(1, min(8, len(sink_names)))) as ex:
-            for f in [ex.submit(_write, s) for s in sink_names]:
-                f.result()
+            for s in sink_names:
+                ex.submit(_write_unless_failed, s)
+        if errors:
+            raise errors[0]
     finally:
         cached.unpersist()
-
-
-def read_sink(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
-    return spark.read.parquet(out_dir).where(F.col("sink") == sink)

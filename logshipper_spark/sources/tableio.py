@@ -1,5 +1,5 @@
-"""Table IO abstraction: Iceberg when the runtime jars are present, parquet
-directory layout otherwise.
+"""Table IO abstraction: a parquet directory layout that mirrors the Iceberg
+table design.
 
 The production design (SURVEY.md §2.9) targets Iceberg tables partitioned by
 ``days(ts), bucket(64, conv_id)`` so Catalyst gets partition pruning on both
@@ -23,18 +23,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class TableIO:
-    """Read/write tables under a warehouse root, Iceberg-or-parquet."""
+    """Read/write tables under a warehouse root in the Iceberg-mirroring
+    parquet layout."""
 
     spark: SparkSession
     warehouse: str

@@ -113,29 +113,18 @@ class TestDedup:
         assert (0, 1) in pairs and pairs[(0, 1)] == d01
         assert not any(2 in p for p in pairs)
 
-    def test_minhash_signature_column_form_matches_jvm_aggregate(self, spark, docs):
-        """Drift guard (r4 review): the interpreted Column form and the
-        explode+aggregate scale path share the xxhash64 basis and must
-        produce IDENTICAL signatures."""
-        small = docs.limit(20)
-        col_form = {r["doc_id"]: r["sig"] for r in small.select(
-            "doc_id", dedup.minhash_signature(F.col("text"), num_hashes=8).alias("sig")
-        ).collect()}
-        agg_form = {r["id"]: r["sig"] for r in
-                    dedup.minhash_signatures(small, num_hashes=8).collect()}
-        assert col_form == agg_form
-
     def test_minhash_seed_threads_through_candidates(self, docs):
         """r4 review: seed was unreachable from the candidate/dedup API."""
+        sig = {seed: {r["id"]: r["sig"] for r in
+                      dedup.minhash_signatures_pandas(docs, seed=seed).collect()}
+               for seed in (7, 7777)}
+        assert sig[7] != sig[7777]  # the seed reaches the signature pass
         a = {(r["id_a"], r["id_b"]) for r in
-             dedup.minhash_dedup_pairs(docs, threshold=0.5, strategy="jvm",
-                                       seed=7).collect()}
+             dedup.minhash_dedup_pairs(docs, threshold=0.5, seed=7).collect()}
         b = {(r["id_a"], r["id_b"]) for r in
-             dedup.minhash_dedup_pairs(docs, threshold=0.5, strategy="jvm",
-                                       seed=7777).collect()}
-        # exact-verify stage makes true pairs seed-independent; the call
-        # itself must accept the seed without TypeError
-        assert a == b
+             dedup.minhash_dedup_pairs(docs, threshold=0.5, seed=7777).collect()}
+        # exact-verify stage makes true pairs seed-independent
+        assert a == b == {(0, 1), (0, 2), (1, 2)}
 
     def test_simhash_md5_variant_same_structure(self, docs):
         # the cross-engine (oracle-checkable) md5 leaf hash must agree with
@@ -196,12 +185,60 @@ class TestBucketCap:
         assert got == {(0, i) for i in range(1, 1000)}
         assert wall < 120, f"flood bucket took {wall:.0f}s"
 
+    def test_simhash_flood_bucket_star(self, spark):
+        # the minhash flood above, through the simhash chunk buckets: every
+        # chunk bucket holds 1,000 identical fingerprints
+        rows = [(i, "the same boilerplate text repeated everywhere") for i in range(1000)]
+        rows += [(2000, "a genuinely different document about spark")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        pairs = dedup.simhash_near_duplicates(df, max_hamming=3, bucket_cap=100)
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        assert got == {(0, i) for i in range(1, 1000)}
+
     def test_minhash_cap_does_not_change_small_buckets(self, docs):
         capped = dedup.minhash_dedup_pairs(docs, threshold=0.3, num_hashes=32, bands=16,
                                            bucket_cap=100)
         uncapped = dedup.minhash_dedup_pairs(docs, threshold=0.3, num_hashes=32, bands=16,
                                              bucket_cap=0)
         assert {tuple(r) for r in capped.collect()} == {tuple(r) for r in uncapped.collect()}
+
+    def test_simhash_cap_does_not_change_small_buckets(self, docs):
+        capped = dedup.simhash_near_duplicates(docs, max_hamming=8, bucket_cap=100)
+        uncapped = dedup.simhash_near_duplicates(docs, max_hamming=8, bucket_cap=0)
+        got = {tuple(r) for r in capped.collect()}
+        assert {(0, 1), (0, 2), (1, 2)} <= {r[:2] for r in got}
+        assert got == {tuple(r) for r in uncapped.collect()}
+
+    def test_cosine_cap_does_not_change_small_buckets(self, spark):
+        import math
+
+        rows = [(i, [math.cos(i % 10 / 10.0), math.sin(i % 10 / 10.0), 0.1 * (i % 3), 0.0])
+                for i in range(60)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        capped = similarity.cosine_pairs(df, threshold=0.99, bits=4, bucket_cap=100)
+        uncapped = similarity.cosine_pairs(df, threshold=0.99, bits=4, bucket_cap=0)
+        got = {tuple(r) for r in capped.collect()}
+        assert (0, 30) in {r[:2] for r in got}  # identical vectors always pair
+        assert got == {tuple(r) for r in uncapped.collect()}
+
+    def test_cap_zero_is_all_pairs_and_cap_is_hub_star(self, spark):
+        # bucket_pairs itself: one 4-doc bucket, one 2-doc bucket
+        banded = spark.createDataFrame(
+            [(5, 1, "e"), (2, 1, "b"), (9, 1, "i"), (7, 1, "g"), (3, 2, "c"), (4, 2, "d")],
+            "id long, key int, tag string",
+        )
+
+        def pairs(cap):
+            return {tuple(r) for r in
+                    dedup.bucket_pairs(banded, ["key"], cap, carry=("tag",)).collect()}
+
+        assert pairs(0) == pairs(4) == {
+            (2, 5, "b", "e"), (2, 7, "b", "g"), (2, 9, "b", "i"),
+            (5, 7, "e", "g"), (5, 9, "e", "i"), (7, 9, "g", "i"), (3, 4, "c", "d"),
+        }
+        # the 4-doc bucket exceeds cap 3: hub 2 × members, carried tags intact
+        assert pairs(3) == {(2, 5, "b", "e"), (2, 7, "b", "g"), (2, 9, "b", "i"),
+                            (3, 4, "c", "d")}
 
     def test_cosine_pairs_flood_bucket_star(self, spark):
         rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(500)]
@@ -266,6 +303,30 @@ class TestSimilarity:
         # identical-angle vectors must be found
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert (0, 10) in got
+
+
+    def test_null_or_ragged_vector_names_the_column(self, spark):
+        msg = r"vector column 'embedding' holds a NULL or ragged vector"
+        schema = "vec_id long, embedding array<double>"
+        nulls = spark.createDataFrame([(1, [1.0, 0.0]), (2, None)], schema).coalesce(1)
+        with pytest.raises(Exception, match=msg):
+            similarity.cosine_topk_pandas(nulls, [1.0, 0.0], k=2).collect()
+        ragged = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])], schema)
+        with pytest.raises(Exception, match=msg):
+            similarity.cluster_assign(ragged.coalesce(1), [[1.0, 0.0]]).collect()
+        empty = spark.createDataFrame([], schema)
+        assert similarity.cosine_topk_pandas(empty, [1.0, 0.0]).collect() == []
+        assert similarity.cluster_assign(empty, [[1.0, 0.0]]).collect() == []
+
+    def test_blocked_cosine_pairs_keeps_string_ids(self, spark):
+        df = spark.createDataFrame(
+            [("a", "x", [1.0, 0.0]), ("b", "x", [1.0, 0.0]), ("c", "x", [0.0, 1.0]),
+             ("d", "y", [1.0, 0.0])],
+            "vec_id string, label string, embedding array<double>",
+        )
+        out = similarity.blocked_cosine_pairs(df, threshold=0.9)
+        assert out.schema["id_a"].dataType.simpleString() == "string"
+        assert {tuple(r) for r in out.collect()} == {("a", "b", 1.0)}
 
 
 class TestTextstats:
@@ -576,13 +637,10 @@ class TestSignaturePaths:
         for k, v in df_sh.items():
             assert col_sh[k] == v
 
-    def test_minhash_jvm_and_pandas_same_dups(self, spark, docs):
-        # different hash families → different signatures, but both paths
-        # must find the exact-duplicate pairs
-        for strategy in ("jvm", "pandas"):
-            pairs = dedup.minhash_dedup_pairs(docs, threshold=0.99, strategy=strategy)
-            got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-            assert {(0, 1), (0, 2), (1, 2)} <= got, strategy
+    def test_minhash_signature_path_finds_exact_dups(self, spark, docs):
+        pairs = dedup.minhash_dedup_pairs(docs, threshold=0.99)
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        assert {(0, 1), (0, 2), (1, 2)} <= got
 
     def test_hyperplane_column_and_df_paths_agree(self, spark):
         emb = spark.createDataFrame(

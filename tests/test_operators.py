@@ -102,6 +102,34 @@ class TestRouteWrites:
             assert a.select(cols).exceptAll(b.select(cols)).count() == 0
             assert a.count() == b.count() > 0
 
+    def test_per_sink_first_failure_cancels_queued_sinks(self, spark, monkeypatch, tmp_path):
+        """12 sinks over the 8-worker cap: the first sink write to start
+        fails at once, the other running writes fail a second later.  The
+        first error re-raises and the 4 queued sinks never start."""
+        import threading
+        import time
+
+        from logshipper_spark.operators import route
+
+        started, lock = [], threading.Lock()
+
+        def failing_with_bucket(df, **kw):
+            with lock:
+                started.append(df)
+                first = len(started) == 1
+            if first:
+                raise RuntimeError("first sink failed")
+            time.sleep(1.0)
+            raise RuntimeError("later sink failed")
+
+        monkeypatch.setattr(route, "with_bucket", failing_with_bucket)
+        sinks = [f"s{i:02d}" for i in range(12)]
+        df = spark.createDataFrame([("c1", 0, "x")], "conv_id string, turn_idx int, text string")
+        with pytest.raises(RuntimeError, match="first sink failed"):
+            write_fanout_per_sink(compile_pipeline([{"forward": sinks}]).apply(df), sinks,
+                                  str(tmp_path))
+        assert 1 <= len(started) <= 8
+
     def test_forward_then_drop_still_delivers(self, spark, transcripts, tmp_path):
         pipe = compile_pipeline(self.PIPE_FWD_DROP)
         d = str(tmp_path / "fwd_drop")
